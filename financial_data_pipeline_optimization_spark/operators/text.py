@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from financial_data_pipeline_optimization_spark.functions import explode_nonempty
+from financial_data_pipeline_optimization_spark.sources import local_table
 
 #: Per-language marker stopwords for the n-gram/stopword language-ID
 #: heuristic. Deliberately tiny and deterministic — a real deployment
@@ -1107,8 +1108,8 @@ def bpe_train_merges(
         vocab = vocab.select(
             "freq", _merge_pair_fold(F.col("syms"), top["a"], top["b"]).alias("syms")
         ).localCheckpoint(eager=False)
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_table(
+        df.sparkSession,
         merges,
         "round int, sym_a string, sym_b string, merged string, "
         "pair_count long",

@@ -35,6 +35,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from financial_data_pipeline_optimization_spark.sources import local_table
+
 
 def _to_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -627,8 +629,8 @@ def ivf_store(
     cells = _nearest_cells(
         corpus, cen_unit, 1, id_col, vec_col, id_col
     ).select(id_col, F.col("__v").alias(vec_col), "cell")
-    spark = corpus.sparkSession
-    centroids_df = spark.createDataFrame(
+    centroids_df = local_table(
+        corpus.sparkSession,
         [(i, cen_unit[i].tolist()) for i in range(cen_unit.shape[0])],
         "cell int, centroid array<double>",
     )
@@ -1582,12 +1584,12 @@ def pq_store(
         corpus, m, k_codes, train_iters, id_col, vec_col
     )
     codes_df = pq_encode(corpus, books, id_col, vec_col)
-    spark = corpus.sparkSession
     # Enumerate from the TRAINED shape, not the requested k_codes: a
     # corpus with fewer rows than k_codes seeds (and returns) a
     # smaller codebook, and range(k_codes) would index past it.
     n_subs, n_codes = books.shape[0], books.shape[1]
-    books_df = spark.createDataFrame(
+    books_df = local_table(
+        corpus.sparkSession,
         [
             (j, c, books[j, c].tolist())
             for j in range(n_subs)

@@ -38,6 +38,7 @@ from financial_data_pipeline_optimization_spark.operators import (
     sampling,
     text,
 )
+from financial_data_pipeline_optimization_spark.sources import local_table
 
 
 def curate_corpus(
@@ -468,8 +469,8 @@ def incremental_ingest(
     n_new = new.count()
     n_exact = exact_dupes.count()
     n_near = near_hit_ids.count()
-    spark = new.sparkSession
-    report = spark.createDataFrame(
+    report = local_table(
+        new.sparkSession,
         [(n_old, n_new, n_exact, n_near, n_new - n_exact - n_near)],
         "n_old bigint, n_new bigint, n_exact_dup bigint, "
         "n_near_dup bigint, n_accepted bigint",

@@ -31,6 +31,7 @@ from financial_data_pipeline_optimization_spark import schemas
 from financial_data_pipeline_optimization_spark.functions import stable_id
 from financial_data_pipeline_optimization_spark.operators import clean, dedup, joins, temporal
 from financial_data_pipeline_optimization_spark.sources import (
+    local_table,
     read_parquet_if_exists,
     write_jdbc,
     write_parquet,
@@ -66,10 +67,16 @@ def company_dim(
     spark: SparkSession, companies: dict[str, str] | None = None
 ) -> DataFrame:
     """The ticker→company lookup as a broadcastable dimension table
-    (F6/J2; the reference's in-driver dict, ``extraction.py:85-94``)."""
+    (F6/J2; the reference's in-driver dict, ``extraction.py:85-94``).
+
+    Built as an Arrow ``LocalRelation`` (:func:`sources.local_table`),
+    never a Python-list ``createDataFrame``: that form's Python RDD put
+    Python-worker tasks behind each of an incremental load's two dim
+    broadcasts, 0.65 s of the op's 0.72 s executor time on ``local[4]``
+    (AB_LOCAL_RELATION.json)."""
     companies = companies or DEFAULT_COMPANIES
-    return spark.createDataFrame(
-        list(companies.items()), schema=schemas.FINANCE_COMPANY_DIM
+    return local_table(
+        spark, companies.items(), schemas.FINANCE_COMPANY_DIM
     )
 
 

@@ -363,6 +363,14 @@ _CHANGED_SINCE_CHECK: tuple[tuple[str, int], ...] = (
     ("knn_ivf_recall_check", 17),
     ("kmeans_cluster_check", 17),
     ("semdedup_check", 17),
+    # r18: incremental_ingest's report row is an Arrow LocalRelation
+    # (sources.local_table) instead of a Python-RDD createDataFrame
+    # (values identical, plan changed). star_join sums exact DECIMAL
+    # line revenue before the cents rounding in both engines, so an
+    # exact .xx5 region tie rounds up in both (values change only on
+    # such ties; oracle changed too).
+    ("incremental_ingest_report", 18),
+    ("star_join_revenue_by_region", 18),
 )
 
 

@@ -617,8 +617,9 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "star_join_revenue_by_region",
     """
     SELECT r.r_name,
-           floor(SUM(l.l_extendedprice * (1 - l.l_discount))*100 + 0.50005)/100
-             AS revenue
+           CAST(floor(SUM(CAST(l.l_extendedprice AS DECIMAL(15,2))
+                          * (1 - CAST(l.l_discount AS DECIMAL(15,2))))
+                      * 100 + 0.50005) / 100 AS DOUBLE) AS revenue
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
     JOIN customer c ON o.o_custkey = c.c_custkey
@@ -633,7 +634,11 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "clustered by orderkey) and every join — including the customer "
     "join that outgrows the broadcast threshold at scale — moves "
     "order-grain rows instead of 4x the lineitems. The oracle keeps "
-    "the flat lineitem-grain join+SUM.",
+    "the flat lineitem-grain join+SUM. Both sum exact DECIMAL(15,2) "
+    "line revenue before the cents rounding: a double sum at region "
+    "scale can miss an exact .xx5 tie by more than _r2's nudge, in a "
+    "direction that depends on summation order, so the engines could "
+    "round the same tie apart.",
 )
 def q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -643,7 +648,8 @@ def q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = _t(spark, sf_dir, "region")
     per_order = li.groupBy("l_orderkey").agg(
         F.sum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            F.col("l_extendedprice").cast("decimal(15,2)")
+            * (1 - F.col("l_discount").cast("decimal(15,2)"))
         ).alias("order_rev")
     )
     return (

@@ -11,6 +11,7 @@ from financial_data_pipeline_optimization_spark.sources.layout import (
 from financial_data_pipeline_optimization_spark.sources.readers import (
     load_table,
     load_tables,
+    local_table,
     register_views,
     read_csv,
     read_jdbc,
@@ -31,6 +32,7 @@ __all__ = [
     "bucketed_join",
     "load_table",
     "load_tables",
+    "local_table",
     "register_views",
     "read_csv",
     "read_jdbc",

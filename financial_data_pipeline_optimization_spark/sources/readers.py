@@ -21,6 +21,34 @@ from pyspark.sql import types as T
 from financial_data_pipeline_optimization_spark import schemas
 
 
+def local_table(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-built table (a dim, a codebook, a report row) as
+    an in-driver ``LocalRelation``.
+
+    ``spark.createDataFrame(list_of_tuples)`` goes through
+    ``sc.parallelize``, so its plan is a ``LogicalRDD`` over a Python
+    RDD and every action that reads it (each broadcast of a dim) runs
+    Python-worker tasks. Handed over as a ``pyarrow.Table`` the same
+    rows plan as a ``LocalRelation`` up to
+    ``spark.sql.execution.arrow.localRelationThreshold`` (larger tables
+    stay JVM-side Arrow batches), so reading one runs no Python worker.
+    ``schema`` is a ``StructType`` or a DDL string.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows = list(rows)
+    table = pa.table(
+        {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)},
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def read_parquet(
     spark: SparkSession, path: str, columns: Iterable[str] | None = None
 ) -> DataFrame:

@@ -272,13 +272,13 @@ def running_counts_agg(
 
     The trade this pair of operators documents: when the semantics ARE
     expressible as a streaming aggregation (running totals are), the
-    JVM path is the right default — measured ~6x the Python-state
-    scenario's throughput (tools/bench_streaming.py,
-    ``stateful_running_counts_jvm`` vs ``stateful_running_counts_
-    python`` in STREAMING_BENCH.json). ``applyInPandasWithState``
+    JVM path is the right default. tools/bench_streaming.py measures
+    both (``stateful_running_counts_jvm`` vs
+    ``stateful_running_counts_python``); no committed artifact holds
+    the JVM scenario's throughput yet. ``applyInPandasWithState``
     remains for semantics built-ins cannot express (custom session
-    logic, online accumulators with per-key eviction rules) — that gap
-    is the measured price of the arbitrary-state API, not a default.
+    logic, online accumulators with per-key eviction rules) — the
+    price of the arbitrary-state API, not a default.
 
     Output schema and per-batch update rows are identical to the
     Python twin (pinned by tests/test_streaming.py).

@@ -101,3 +101,44 @@ def test_no_oracle_is_vacuously_empty(duck):
         ).fetchall()
     ]
     assert not empty, empty
+
+
+def test_star_join_rounds_exact_half_cent_tie_up(spark, tmp_path):
+    """A region whose exact revenue ends in half a cent rounds up in
+    the engine and in its oracle alike. EUROPE's planted revenue is
+    10,000,000,000.00 + 0.01 * (1 - 0.50) = 10,000,000,000.005 exactly;
+    the nearest double lies below the tie by more than ``_r2``'s nudge,
+    so a double SUM gives .00 in either engine. Exact DECIMAL sums give
+    the HALF_UP .01 (ASIA's 10.095 is a small-magnitude tie)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    i32 = pa.int32()
+    tables = {
+        "region": {"r_regionkey": pa.array([0, 1], i32),
+                   "r_name": ["ASIA", "EUROPE"]},
+        "nation": {"n_nationkey": pa.array([0, 1], i32),
+                   "n_regionkey": pa.array([0, 1], i32)},
+        "customer": {"c_custkey": [0, 1],
+                     "c_nationkey": pa.array([0, 1], i32)},
+        "orders": {"o_orderkey": [0, 1, 2, 3], "o_custkey": [0, 0, 1, 1]},
+        "lineitem": {"l_orderkey": [0, 1, 2, 3],
+                     "l_extendedprice": [10.0, 0.10, 1e10, 0.01],
+                     "l_discount": [0.0, 0.05, 0.0, 0.50]},
+    }
+    for name, cols in tables.items():
+        pq.write_table(pa.table(cols), tmp_path / f"{name}.parquet")
+    spec = next(s for s in SPECS if s.name == "star_join_revenue_by_region")
+    want = {("ASIA", 10.10), ("EUROPE", 10_000_000_000.01)}
+
+    got = {tuple(r) for r in spec.spark(spark, str(tmp_path)).collect()}
+    assert got == want
+    con = duckdb.connect()
+    for name in tables:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM "
+            f"read_parquet('{tmp_path / name}.parquet')"
+        )
+    assert set(con.execute(spec.oracle).fetchall()) == want
+    con.close()

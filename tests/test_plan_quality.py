@@ -142,6 +142,47 @@ def test_no_row_python_udfs_anywhere(spark):
     assert not offenders, offenders
 
 
+def test_driver_built_tables_are_local_relations(spark):
+    """Tables the engine builds from driver-side rows plan as an
+    in-driver LocalRelation. A Python-list createDataFrame plans as a
+    LogicalRDD over a Python RDD instead, and every action that reads
+    it (each broadcast of the company dim) runs Python-worker tasks."""
+    from financial_data_pipeline_optimization_spark.operators import (
+        text,
+        vector,
+    )
+    from financial_data_pipeline_optimization_spark.plans import (
+        corpus,
+        finance,
+    )
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    emb = load_table(spark, SF_SMOKE, "embeddings").filter(
+        F.col("vec_id") < 20
+    )
+    docs = load_table(spark, SF_SMOKE, "documents")
+    tables = {
+        "company_dim": finance.company_dim(spark),
+        "ivf_store centroids": vector.ivf_store(
+            emb, num_centroids=4, train_iters=1
+        )[1],
+        "pq_store codebooks": vector.pq_store(emb, k_codes=4)[1],
+        "bpe merges": text.bpe_train_merges(docs, "text", rounds=1),
+        "incremental_ingest report": corpus.incremental_ingest(
+            docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1),
+        )[1],
+    }
+    for name, df in tables.items():
+        plan = optimized(df)
+        assert plan.startswith("LocalRelation"), (name, plan)
+        assert "LogicalRDD" not in plan, (name, plan)
+    raw = finance.extract_prices(finance.synthetic_prices(spark, days=1))
+    assert "LogicalRDD" not in optimized(raw)
+
+
 def test_incremental_merge_prunes_warehouse_partitions(spark, tmp_path):
     """The incremental NOT-EXISTS merge must not scan the whole
     warehouse: the existing-side read is restricted to the batch's
@@ -452,14 +493,19 @@ def test_salted_join_spreads_planted_skew_and_aqe_marks_it(spark):
 
         plain_loads = reducer_loads(plain)
         salted_loads = reducer_loads(salted)
-        # Plain: one reducer owns the whole hot key — the straggler.
+        # Bounds are relative to the hot key, not absolute: the 6,400
+        # cold rows spread over however many reducers the session has
+        # (~200 each at 32, ~1,600 each at 4), always far below hot/20.
+        cold_max = hot // 20
+        # Plain: one reducer owns the whole hot key — the straggler —
+        # and every other reducer holds only cold rows.
         assert plain_loads[0] >= hot
-        assert len([n for n in plain_loads if n > 1_000]) == 1
+        assert all(n <= cold_max for n in plain_loads[1:]), plain_loads
         # Salted: the hot key is spread across >=4 distinct reducers and
         # no reducer carries more than ~60% of it (8 uniform salts; the
         # bound survives improbable partition collisions).
         assert salted_loads[0] <= int(hot * 0.6)
-        assert len([n for n in salted_loads if n > 1_000]) >= 4
+        assert len([n for n in salted_loads if n > cold_max]) >= 4
 
         # AQE alone on the SAME planted shape: runtime skew-split marks
         # the join, no manual salting required.
